@@ -147,7 +147,13 @@ def psl_rules_df(spark) -> DataFrame:
         + [(s, s.count(".") + 1, 1) for s in wild]
         + [(s, s.count(".") + 1, 2) for s in exc]
     )
-    return spark.createDataFrame(rows, "join_key string, labels int, kind int")
+    from pyspark.sql.types import StructType
+
+    from ..io.driver_rows import driver_rows_df
+
+    return driver_rows_df(
+        spark, rows, StructType.fromDDL("join_key string, labels int, kind int")
+    )
 
 
 MAX_SUFFIX_LABELS = 5  # longest PSL rules are 4 labels; +1 margin

@@ -20,12 +20,20 @@ in round 5, io/stages.py):
   (pipeline kwargs, scrub-bank version) plus num_buckets itself —
   bucket ids don't even align across num_buckets changes, so any
   change reruns everything.
-- Before a bucket's output dir is overwritten, a `running` row is
-  appended; the `done` row follows the commit. The manifest stays
+- Supersede only when a row exists: before a bucket's output dir is
+  overwritten, a `running` row is appended IF the manifest already
+  holds a row for that bucket (known from the rows done_buckets()
+  read); the `done` row follows the commit. The manifest stays
   append-only (cheap at 10^12 scale — one Iceberg append per bucket,
   no manifest rewrite), and latest-row semantics make every crash
   window safe: die mid-overwrite or before the done row and the
-  latest row says `running` → the bucket reruns whole.
+  latest row says `running` → the bucket reruns whole. A bucket with
+  no row needs no `running` row: crash before its done row lands and
+  it still has no row, so it reruns whole all the same (the run lease
+  rules out a second writer adding one meanwhile).
+- Rows are built on the driver through io/driver_rows (a JVM-only
+  local scan, no Python worker), so one append is one small file
+  write.
 - Rows from pre-params_sig manifests (no such column) never match the
   current sig → conservative rerun. Ties on (committed_at, seq) —
   only possible across processes writing in the same second — are
@@ -54,6 +62,7 @@ from pyspark.sql.types import (
 )
 
 from .catalog import Catalog
+from .driver_rows import driver_rows_df
 
 MANIFEST_SCHEMA = StructType(
     [
@@ -126,7 +135,10 @@ class ManifestedRun:
     def done_buckets(self) -> set[int]:
         """Buckets whose LATEST manifest row (max (committed_at, seq))
         is done with the current params_sig. A tie for latest — two
-        writers in the same second — is conservatively NOT done."""
+        writers in the same second — is conservatively NOT done. Also
+        records every bucket holding any row, which run() reads to
+        skip `running` rows that would supersede nothing."""
+        self._buckets_with_rows: set[int] = set()
         if not self.catalog.exists(MANIFEST_TABLE):
             return set()
         rows = (
@@ -143,6 +155,7 @@ class ManifestedRun:
                 tied.discard(r.bucket)
             elif key == latest[r.bucket][0] and r is not latest[r.bucket][1]:
                 tied.add(r.bucket)
+        self._buckets_with_rows = set(latest)
         return {
             b
             for b, (_, r) in latest.items()
@@ -164,22 +177,20 @@ class ManifestedRun:
         hist: dict | None = None,
         wall: float | None = None,
     ) -> None:
-        row = [
-            (
-                bucket,
-                status,
-                input_rows,
-                kept,
-                hist,
-                wall,
-                self.run_id,
-                int(time.time()),
-                self.params_sig,
-                time.time_ns(),
-            )
-        ]
+        row = (
+            bucket,
+            status,
+            input_rows,
+            kept,
+            hist,
+            wall,
+            self.run_id,
+            int(time.time()),
+            self.params_sig,
+            time.time_ns(),
+        )
         self.catalog.append(
-            self.spark.createDataFrame(row, MANIFEST_SCHEMA), MANIFEST_TABLE
+            driver_rows_df(self.spark, [row], MANIFEST_SCHEMA), MANIFEST_TABLE
         )
 
     def run(self, clips: DataFrame, transform, output_table: str) -> dict:
@@ -200,10 +211,12 @@ class ManifestedRun:
         summary = {"buckets_run": 0, "buckets_skipped": self.num_buckets - len(pending)}
         for b in pending:
             t0 = time.monotonic()
-            # supersede any stale done row BEFORE touching the output:
+            # supersede any existing row BEFORE touching the output:
             # from here until the done row lands, latest-row = running
-            # → any crash reruns the bucket
-            self._append_row(b, "running")
+            # → any crash reruns the bucket. A bucket with no row has
+            # nothing to supersede and stays rowless until done.
+            if b in self._buckets_with_rows:
+                self._append_row(b, "running")
             # bucket predicate prunes at the scan (partition/bucket
             # pruning when the table is bucket-partitioned on the key)
             part = clips.filter(bucket_of(F.col(self.key_col), self.num_buckets) == b)

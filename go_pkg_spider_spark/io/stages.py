@@ -13,7 +13,14 @@ r4):
   exists (the A -> B -> A resume-staleness hole).
 - commit() purges a stage's manifest rows BEFORE rewriting its table:
   a crash mid-overwrite leaves no row marking the half-written table
-  done, so resume reruns the stage.
+  done, so resume reruns the stage. Purge only when a row exists: a
+  stage with no manifest row (known from the rows _done_stages() read,
+  plus the stages this runner appended) skips the purge's collect and
+  manifest overwrite — crash mid-write and it still has no row, so
+  resume reruns it all the same (the run lease rules out a second
+  writer adding one meanwhile).
+- Manifest rows, the purge's rewrite included, are built on the driver
+  through io/driver_rows (a JVM-only local scan, no Python worker).
 - Once any stage reruns, every DOWNSTREAM stage reruns too (their
   inputs changed) — tracked via `upstream_reran`.
 - The params_sig covers EVERY knob that changes any stage's output;
@@ -31,6 +38,8 @@ import time
 import uuid
 
 from pyspark.sql import functions as F
+
+from .driver_rows import driver_rows_df
 
 
 class LeaseHeldError(RuntimeError):
@@ -270,7 +279,9 @@ class StageRunner:
         latest — only possible for pre-seq legacy rows committed in the
         same second, or two same-second writers — is ambiguous about
         which row describes the table on disk, so the stage is
-        conservatively treated as NOT done (rerun)."""
+        conservatively treated as NOT done (rerun). Also records every
+        stage holding any row, for _invalidate."""
+        self._stages_with_rows: set[str] = set()
         if not self.cat.exists(self.manifest_table):
             return set()
         rows = (
@@ -287,6 +298,7 @@ class StageRunner:
                 tied.discard(r.stage)
             elif key == latest[r.stage][0] and r is not latest[r.stage][1]:
                 tied.add(r.stage)
+        self._stages_with_rows = set(latest)
         return {
             s
             for s, (_, r) in latest.items()
@@ -301,20 +313,23 @@ class StageRunner:
     def _invalidate(self, stage: str) -> None:
         """Remove a stage's manifest rows BEFORE its table is rewritten.
         The manifest is tiny — collect to the driver, then overwrite
-        (Spark can't overwrite a path it is concurrently reading)."""
-        if not self.cat.exists(self.manifest_table):
+        (Spark can't overwrite a path it is concurrently reading). A
+        stage with no row has nothing to remove: no collect, no write."""
+        if stage not in self._stages_with_rows:
             return
+        schema = manifest_schema()
         kept = (
             self._manifest_df()
-            .select(*[f.name for f in manifest_schema().fields])
+            .select(*schema.names)
             .filter(F.col("stage") != stage)
             .collect()
         )
         self.cat.write(
-            self.spark.createDataFrame(kept, manifest_schema()),
+            driver_rows_df(self.spark, kept, schema),
             self.manifest_table,
             mode="overwrite",
         )
+        self._stages_with_rows.discard(stage)
 
     def commit(
         self, stage: str, df, metrics_after=None, partition_by=None
@@ -331,22 +346,21 @@ class StageRunner:
         metrics = dict(metrics_after() if metrics_after else {})
         metrics["params_sig"] = self._sig_for(stage)
         rows = self.cat.read(stage).count()
-        mdf = self.spark.createDataFrame(
-            [
-                (
-                    stage,
-                    "done",
-                    rows,
-                    metrics,
-                    round(time.monotonic() - t0, 3),
-                    self.run_id,
-                    int(time.time()),
-                    next(self._seq),
-                )
-            ],
-            manifest_schema(),
+        row = (
+            stage,
+            "done",
+            rows,
+            metrics,
+            round(time.monotonic() - t0, 3),
+            self.run_id,
+            int(time.time()),
+            next(self._seq),
         )
-        self.cat.append(mdf, self.manifest_table)
+        self.cat.append(
+            driver_rows_df(self.spark, [row], manifest_schema()),
+            self.manifest_table,
+        )
+        self._stages_with_rows.add(stage)
         self.upstream_reran = True
         self.summary["stages_run"] += 1
         self.summary["stage_rows"][stage] = rows

@@ -84,6 +84,23 @@ def capped_buckets(
     return buckets.observe(metric_name or f"bucket_cap_{next(_obs_counter)}", *metrics)
 
 
+def observed_metrics(observation) -> dict:
+    """`observation.get`, or {} when the observed node never ran: AQE's
+    empty-relation propagation drops the CollectMetrics node when the
+    observed subtree produced ZERO rows (all-singleton buckets, e.g. an
+    input with no near-dup candidates; no index key matches), and the
+    Observation is then left with an empty row that `Observation.get`
+    cannot convert (AssertionError in PythonSQLUtils.toPyRow). Zero
+    buckets means zero drops, so callers read every missing metric as
+    0."""
+    from py4j.protocol import Py4JJavaError
+
+    try:
+        return observation.get
+    except Py4JJavaError:
+        return {}
+
+
 def pair_array(ms: Column, a_name: str = "a", b_name: str = "b") -> Column:
     """All i<j member pairs of a (small, capped) bucket array as
     array<struct<a, b>> via array combinatorics — the no-self-join pair

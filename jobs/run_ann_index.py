@@ -140,8 +140,10 @@ def _run_ann_index_locked(
     scorer: str = "join",
 ) -> dict:
     from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
 
     from go_pkg_spider_spark.io.catalog import Catalog
+    from go_pkg_spider_spark.io.driver_rows import driver_rows_df
     from go_pkg_spider_spark.io.stages import StageRunner
     from go_pkg_spider_spark.operators import similarity
 
@@ -181,8 +183,10 @@ def _run_ann_index_locked(
             )
         runner.commit(
             "centroids",
-            spark.createDataFrame(
-                _centroids_long_rows(cents), "cell int, pos int, val double"
+            driver_rows_df(
+                spark,
+                _centroids_long_rows(cents),
+                StructType.fromDDL("cell int, pos int, val double"),
             ),
             metrics_after=lambda: {
                 "n_cells": str(len(cents)),

@@ -119,6 +119,7 @@ def _run_locked(
     from go_pkg_spider_spark.io.stages import StageRunner
     from go_pkg_spider_spark.operators import components as cc_ops
     from go_pkg_spider_spark.operators import audio_fp as afp
+    from go_pkg_spider_spark.operators.bucketing import observed_metrics
 
     if min_jaccard is None:
         min_jaccard = afp.FP_SUBFP_JACCARD
@@ -187,17 +188,9 @@ def _run_locked(
             )
 
         def _bucket_metrics():
-            try:
-                got = obs.get
-            except Exception:
-                # AQE empty-relation propagation through the verify
-                # join eliminates the CollectMetrics node when the
-                # bucket subtree produced ZERO rows (all-singleton
-                # buckets) — the only collapse case, measured: with
-                # any nonempty bucket the observation survives even
-                # when every pair is later rejected. Zero buckets
-                # means zero drops by definition.
-                got = {}
+            # with any nonempty bucket the observation survives even
+            # when every pair is later rejected (measured)
+            got = observed_metrics(obs)
             m = {
                 "dropped_members": str(got.get("dropped_members") or 0),
                 "max_bucket_members": str(got.get("max_bucket_members") or 0),
@@ -388,6 +381,7 @@ def run_audio_dedup_increment(
     from go_pkg_spider_spark.io.catalog import Catalog
     from go_pkg_spider_spark.io.stages import StageRunner, run_lease
     from go_pkg_spider_spark.operators import audio_fp as afp
+    from go_pkg_spider_spark.operators.bucketing import observed_metrics
 
     if tier not in ("fp64", "subfp"):
         raise ValueError(f"unknown tier {tier!r} (fp64 | subfp)")
@@ -482,13 +476,8 @@ def run_audio_dedup_increment(
             )
 
             def _match_metrics():
-                try:
-                    got = obs.get
-                except Exception:
-                    # same AQE empty-relation collapse as the batch
-                    # job's bucket metrics: zero key matches = zero
-                    # drops by definition
-                    got = {}
+                # zero key matches = zero drops (see observed_metrics)
+                got = observed_metrics(obs)
                 return {
                     "dropped_index_keys": str(got.get("dropped_index_keys") or 0),
                     "max_key_matches_seen": str(

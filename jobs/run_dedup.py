@@ -100,6 +100,7 @@ def _run_dedup_locked(
     from go_pkg_spider_spark.io.stages import StageRunner
     from go_pkg_spider_spark.operators import components as cc_ops
     from go_pkg_spider_spark.operators import dedup
+    from go_pkg_spider_spark.operators.bucketing import observed_metrics
 
     cat = Catalog(spark, output_root)
 
@@ -152,7 +153,7 @@ def _run_dedup_locked(
         ).filter(F.col("jaccard") >= threshold)
 
         def _bucket_metrics():
-            got = obs.get
+            got = observed_metrics(obs)
             return {
                 "dropped_members": str(got.get("dropped_members") or 0),
                 "max_bucket_members": str(got.get("max_bucket_members") or 0),

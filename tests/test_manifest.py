@@ -9,10 +9,13 @@ from __future__ import annotations
 import json
 import time
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from go_pkg_spider_spark import pipeline
 from go_pkg_spider_spark.io.catalog import Catalog
+from go_pkg_spider_spark.io.driver_rows import driver_rows_df
 from go_pkg_spider_spark.io.manifest import (
     MANIFEST_SCHEMA,
     MANIFEST_TABLE,
@@ -44,7 +47,7 @@ def _commit_one_bucket(spark, cat, clips, bucket, num_buckets, table="decisions"
             "crashed", int(time.time()), _sig(num_buckets), 0,
         )
     ]
-    cat.append(spark.createDataFrame(row, MANIFEST_SCHEMA), MANIFEST_TABLE)
+    cat.append(driver_rows_df(spark, row, MANIFEST_SCHEMA), MANIFEST_TABLE)
 
 
 def test_full_run_then_nothing_pending(spark, clips_path, tmp_path):
@@ -167,11 +170,13 @@ def test_legacy_manifest_without_sig_reruns(spark, clips_path, tmp_path):
     clips = spark.read.parquet(clips_path)
     cat = Catalog(spark, str(tmp_path / "legacy"))
     # write a legacy-shaped manifest: done rows without params_sig/seq
-    legacy = spark.createDataFrame(
+    legacy_schema = StructType(
+        [f for f in MANIFEST_SCHEMA.fields if f.name not in ("params_sig", "seq")]
+    )
+    legacy = driver_rows_df(
+        spark,
         [(0, "done", 10, 8, {"": 8}, 1.0, "old", int(time.time()))],
-        "bucket int, status string, input_rows long, kept_rows long, "
-        "drop_histogram map<string,long>, wall_sec double, run_id string, "
-        "committed_at_unix long",
+        legacy_schema,
     )
     cat.append(legacy, MANIFEST_TABLE)
     run = ManifestedRun(spark, cat, 2, "new")
@@ -190,7 +195,92 @@ def test_same_second_tie_is_not_done(spark, clips_path, tmp_path):
         (0, "done", 10, 8, {"": 8}, 1.0, "w2", now, sig, None),
         (1, "done", 10, 8, {"": 8}, 1.0, "w1", now, sig, 5),
     ]
-    cat.append(spark.createDataFrame(rows, MANIFEST_SCHEMA), MANIFEST_TABLE)
+    cat.append(driver_rows_df(spark, rows, MANIFEST_SCHEMA), MANIFEST_TABLE)
     run = ManifestedRun(spark, cat, 2, "r")
     # bucket 0 tied -> rerun; bucket 1 has a unique latest done row -> kept
     assert run.pending_buckets() == [0]
+
+
+class _Crash(RuntimeError):
+    pass
+
+
+def _latest(cat, bucket):
+    rows = cat.read(MANIFEST_TABLE).filter(F.col("bucket") == bucket).collect()
+    return max(rows, key=lambda r: (r.committed_at_unix, r.seq)) if rows else None
+
+
+def test_fresh_root_writes_only_done_rows(spark, clips_path, tmp_path):
+    """No row to supersede on a fresh root: one done row per bucket,
+    no running row."""
+    clips = spark.read.parquet(clips_path)
+    cat = Catalog(spark, str(tmp_path / "fresh"))
+    ManifestedRun(spark, cat, 3, "r").run(clips, _transform, "decisions")
+    rows = cat.read(MANIFEST_TABLE).collect()
+    assert sorted((r.bucket, r.status) for r in rows) == [
+        (0, "done"), (1, "done"), (2, "done"),
+    ]
+
+
+def test_crash_in_first_run_of_bucket_reruns(spark, clips_path, tmp_path):
+    """A bucket's very first run writes no running row; a crash before
+    its done row leaves it rowless, and resume reruns it whole."""
+    clips = spark.read.parquet(clips_path)
+    cat_a = Catalog(spark, str(tmp_path / "ref"))
+    ManifestedRun(spark, cat_a, 2, "ref").run(clips, _transform, "decisions")
+
+    cat = Catalog(spark, str(tmp_path / "first"))
+    calls = iter(range(10))
+
+    def crashing(df):
+        if next(calls) >= 1:
+            raise _Crash("bucket 1")
+        return _transform(df)
+
+    with pytest.raises(_Crash):
+        ManifestedRun(spark, cat, 2, "first").run(clips, crashing, "decisions")
+    assert _latest(cat, 1) is None
+    resume = ManifestedRun(spark, cat, 2, "resume")
+    assert resume.pending_buckets() == [1]
+    assert resume.run(clips, _transform, "decisions") == {
+        "buckets_run": 1, "buckets_skipped": 1,
+    }
+    assert sorted(tuple(r) for r in cat.read("decisions").collect()) == sorted(
+        tuple(r) for r in cat_a.read("decisions").collect()
+    )
+
+
+class _CrashingWriteCatalog(Catalog):
+    """Records the bucket's latest manifest status when its output is
+    about to be overwritten, then crashes before writing."""
+
+    def __init__(self, spark, root):
+        super().__init__(spark, root)
+        self.seen = {}
+
+    def write(self, df, table, mode="overwrite", partition_by=None):
+        if table.startswith("decisions/bucket="):
+            b = int(table.split("=")[1])
+            self.seen[b] = _latest(self, b).status
+            raise _Crash(table)
+        return super().write(df, table, mode=mode, partition_by=partition_by)
+
+
+def test_rerun_supersedes_existing_row_before_output(spark, clips_path, tmp_path):
+    """A bucket that already has rows gets a running row BEFORE its
+    output is touched: a crash mid-write must not leave the old done
+    row as the latest, so the original params rerun the bucket."""
+    clips = spark.read.parquet(clips_path)
+    root = str(tmp_path / "rerun")
+    pa = {"min_chars": 64}
+    ManifestedRun(spark, Catalog(spark, root), 2, "a", params=pa).run(
+        clips, _transform, "decisions"
+    )
+    crashing = _CrashingWriteCatalog(spark, root)
+    with pytest.raises(_Crash):
+        ManifestedRun(spark, crashing, 2, "b", params={"min_chars": 256}).run(
+            clips, _transform, "decisions"
+        )
+    assert crashing.seen == {0: "running"}
+    resume = ManifestedRun(spark, Catalog(spark, root), 2, "a2", params=pa)
+    assert resume.pending_buckets() == [0]

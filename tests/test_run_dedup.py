@@ -141,3 +141,22 @@ def test_dedup_job_invariants_on_testdata(spark, tmp_path):
         F.col("doc_id") != F.col("mn")
     )
     assert bad_keeper.count() == 0
+
+
+def test_dedup_job_without_candidate_buckets(spark, tmp_path):
+    """All-distinct docs leave no LSH candidate bucket (the observed
+    bucket subtree is pruned from the plan): the job reports zero
+    bucket metrics instead of failing, and every doc is kept."""
+    docs = spark.createDataFrame(
+        [
+            (i, f"doc {i} " + " ".join(f"w{i}x{j}" for j in range(30)))
+            for i in range(20)
+        ],
+        "doc_id long, text string",
+    )
+    s = run_dedup(spark, docs, str(tmp_path / "distinct"), run_id="d")
+    assert s["stages_run"] == 4
+    assert s["stage_rows"]["pairs"] == 0
+    assert s["decision_histogram"] == {"keep": 20}
+    m = s["metrics"]["pairs"]
+    assert (m["dropped_members"], m["n_buckets"]) == ("0", "0")
